@@ -4,9 +4,12 @@ them; checkpoint advances with pre-scan stamp."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from knowledgebot_spark import incremental
 from knowledgebot_spark.incremental import run_extraction
 
 MSG_SCHEMA = (
@@ -69,6 +72,9 @@ def test_incremental_runs_and_edit_reprocessing(spark, dims, tmp_path):
     stats = _run(spark, dims, rows1, out, state, now_days=10)
     assert stats["checkpoint_before"] == 0
     assert stats["checkpoint_after"] == 10 * DAY
+    # every scanned message is reprocessed, chunks or not (msg 10)
+    assert stats["n_reprocessed_keys"] == 3
+    assert stats["n_chunks_in_table"] == 2
     table = spark.read.parquet(out)
     assert {r.msg_key for r in table.select("msg_key").collect()} == {
         "C1_8.000000", "C1_9.000000"
@@ -87,6 +93,9 @@ def test_incremental_runs_and_edit_reprocessing(spark, dims, tmp_path):
     rows2[1] = _msg(9, "C1", "#KNOWLEDGE nine-v2 #END", user="U000002")
     stats2 = _run(spark, dims, rows2, out, state, now_days=12)
     assert stats2["checkpoint_before"] == 10 * DAY
+    # fresh 11 and 12, plus the pulled-back parent 9
+    assert stats2["n_reprocessed_keys"] == 3
+    assert stats2["n_chunks_in_table"] == 3
     table = spark.read.parquet(out)
     got = {r.msg_key: r.content for r in table.select("msg_key", "content").collect()}
     # msg 8 untouched (old run's output preserved), 9 replaced, 11 added
@@ -96,12 +105,26 @@ def test_incremental_runs_and_edit_reprocessing(spark, dims, tmp_path):
         "C1_11.000000": "eleven",
     }
 
+    # run 3 at day 16: two #EDIT replies pull parent 11 back, and a third
+    # edits msg 15 of the same delta — each parent is one key, not one per
+    # reply: fresh 13..16 plus parent 11
+    rows3 = rows2 + [
+        _msg(13, "C1", "#EDIT again", thread=11),
+        _msg(14, "C1", "#EDIT and again", thread=11),
+        _msg(15, "C1", "#KNOWLEDGE fifteen #END"),
+        _msg(16, "C1", "#EDIT this one too", thread=15),
+    ]
+    stats3 = _run(spark, dims, rows3, out, state, now_days=16)
+    assert stats3["n_reprocessed_keys"] == 5
+    assert stats3["n_chunks_in_table"] == 4
+
 
 def test_tag_removal_deletes_chunks(spark, dims, tmp_path):
     out, state = str(tmp_path / "chunks"), str(tmp_path / "state")
     rows1 = [_msg(8, "C1", "#KNOWLEDGE text #END"), _msg(9, "C1", "#KNOWLEDGE k9 #END")]
-    _run(spark, dims, rows1, out, state, now_days=10)
+    stats = _run(spark, dims, rows1, out, state, now_days=10)
     assert spark.read.parquet(out).count() == 2
+    assert (stats["n_reprocessed_keys"], stats["n_chunks_in_table"]) == (2, 2)
 
     # day 12: an #EDIT reply re-processes msg 8, whose text no longer has a
     # knowledge block -> K2 tombstone removes its chunks entirely
@@ -110,9 +133,11 @@ def test_tag_removal_deletes_chunks(spark, dims, tmp_path):
         _msg(9, "C1", "#KNOWLEDGE k9 #END"),
         _msg(11, "C1", "#EDIT remove it", thread=8),
     ]
-    _run(spark, dims, rows2, out, state, now_days=12)
+    stats = _run(spark, dims, rows2, out, state, now_days=12)
     table = spark.read.parquet(out)
     assert {r.msg_key for r in table.select("msg_key").collect()} == {"C1_9.000000"}
+    # reply 11 and parent 8 are both counted, though neither yields a chunk
+    assert (stats["n_reprocessed_keys"], stats["n_chunks_in_table"]) == (2, 1)
 
 
 def test_rerun_same_window_is_idempotent(spark, dims, tmp_path):
@@ -122,6 +147,61 @@ def test_rerun_same_window_is_idempotent(spark, dims, tmp_path):
     snap1 = sorted(map(tuple, spark.read.parquet(out).collect()))
     # same now -> ckpt advanced to 10d; re-running with now=10d again
     # processes nothing (all msgs <= ckpt) and must not change the table
-    _run(spark, dims, rows, out, state, now_days=10)
+    stats = _run(spark, dims, rows, out, state, now_days=10)
     snap2 = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert snap1 == snap2
+    assert (stats["n_reprocessed_keys"], stats["n_chunks_in_table"]) == (0, 2)
+
+
+# Spark jobs one merge-path run of the fixture below launches: 20 measured
+# (local[4] and local[2]; 4 and 32 shuffle partitions) for the scope and
+# key-set checkpoints, the sink's table read, chunk-batch checkpoint,
+# grouped pass and write — plus one job of headroom.  Dropping the scope
+# checkpoint makes it 22; re-planning the lineage per action, as the sink
+# and counters once did, took 38 (8 of them for the counters).
+MERGE_RUN_JOB_CEILING = 21
+
+
+def test_merge_run_job_budget(spark, dims, tmp_path, monkeypatch):
+    """A merge-path run evaluates each lineage once: its job count stays
+    under a ceiling, and nothing after the sink — ``run.commit()`` and the
+    two counters — launches a Spark job.  Jobs are split by job group: the
+    sink's return switches the group, so every later job is counted against
+    the counters.  (Stage names cannot tell them apart: PySpark sets a job's
+    call site in only some actions, so a ``count()`` job can carry the name
+    of an earlier ``collect()``.)"""
+    out, state = str(tmp_path / "chunks"), str(tmp_path / "state")
+    rows1 = [
+        _msg(8, "C1", "#KNOWLEDGE v1 of eight #END"),
+        _msg(9, "C1", "#KNOWLEDGE nine #END <@U000001>", user="U000002"),
+        _msg(10, "C1", "no tags"),
+    ]
+    _run(spark, dims, rows1, out, state, now_days=10)  # first write
+    rows2 = rows1 + [
+        _msg(11, "C1", "#KNOWLEDGE eleven #END"),
+        _msg(12, "C1", "#EDIT fix", thread=9),
+    ]
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    run_group, after_sink = f"merge-run-{tag}", f"after-sink-{tag}"
+    sink = incremental.upsert_chunks
+
+    def upsert_then_switch(*args, **kwargs):
+        sink(*args, **kwargs)
+        sc.setJobGroup(after_sink, "incremental run after the sink")
+
+    monkeypatch.setattr(incremental, "upsert_chunks", upsert_then_switch)
+    sc.setJobGroup(run_group, "incremental merge run")
+    try:
+        stats = _run(spark, dims, rows2, out, state, now_days=12)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (stats["n_reprocessed_keys"], stats["n_chunks_in_table"]) == (3, 3)
+
+    tracker = sc.statusTracker()
+    counted = tracker.getJobIdsForGroup(after_sink)
+    assert counted == [], f"{len(counted)} jobs launched after the sink"
+    jobs = tracker.getJobIdsForGroup(run_group)
+    assert 0 < len(jobs) <= MERGE_RUN_JOB_CEILING, len(jobs)

@@ -3,10 +3,16 @@ idempotency, tag-removal tombstone, checkpoint pre-scan stamping)."""
 
 from __future__ import annotations
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from knowledgebot_spark.sinks.checkpoint import IncrementalRun, load_state, save_state
-from knowledgebot_spark.sinks.keyed_parquet import serialize_chunk_files, upsert_chunks
+from knowledgebot_spark.sinks.keyed_parquet import (
+    serialize_chunk_files,
+    table_row_count,
+    upsert_chunks,
+)
 
 COLS = ["msg_key", "channel_name", "msg_date", "snippet_no", "content"]
 
@@ -247,3 +253,35 @@ def test_tombstone_bool_and_null_partition_values(spark, tmp_path):
     # partition values read back as directory-name strings (partition
     # type inference is pinned off session-wide)
     assert rows == [("K3", "false", "us", "keep")]
+
+
+def _files(path):
+    return {p: p.read_bytes() for p in path.rglob("*") if p.is_file()}
+
+
+def test_unreadable_table_raises_and_is_left_untouched(spark, tmp_path):
+    """A table whose data file cannot be read is not a new table: the merge
+    must raise and leave every file in place.  Treating the read error as
+    "no table" would take the first-write path, whose overwrite replaces
+    every partition with the new batch alone."""
+    path = tmp_path / "chunks"
+    path.mkdir()
+    (path / "part-00000-corrupt.snappy.parquet").write_bytes(b"PAR1 not a footer")
+    before = _files(path)
+    batch = _chunks(spark, [("C1_1.0", "general", "20250101", 1, "new")])
+    with pytest.raises(Py4JJavaError, match="footer"):
+        upsert_chunks(spark, str(path), batch)
+    assert _files(path) == before
+
+
+def test_directory_without_data_files_is_a_new_table(spark, tmp_path):
+    """A missing path or a directory holding only markers (``_SUCCESS``,
+    hidden files) takes the first-write path."""
+    path = tmp_path / "chunks"
+    path.mkdir()
+    (path / "_SUCCESS").write_bytes(b"")
+    (path / ".part-00000.crc").write_bytes(b"")
+    batch = _chunks(spark, [("C1_1.0", "general", "20250101", 1, "a")])
+    upsert_chunks(spark, str(path), batch)
+    assert _snapshot(spark, str(path)) == [("C1_1.0", "general", "20250101", 1, "a")]
+    assert table_row_count(str(path)) == 1
